@@ -1759,7 +1759,8 @@ object Bench {
             .filterNot(a => a.contains("jdwp") || a.startsWith("-agentlib"))
           val cmd = Seq(javaBin) ++ jvmArgs ++ Seq(
             "-cp", System.getProperty("java.class.path"),
-            "graft.tools.QueryProbe", queries.mkString(","), dir, runs.toString)
+            graft.tools.QueryProbe.getClass.getName.stripSuffix("$"),
+            queries.mkString(","), dir, runs.toString)
           val pb = new ProcessBuilder(cmd.asJava)
           pb.redirectErrorStream(true)
           val p = pb.start()

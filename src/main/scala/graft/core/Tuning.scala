@@ -1,6 +1,6 @@
 package graft.core
 
-/** Session-sizing heuristics shared by Bench / Verify / TimeQuery. */
+/** Session-sizing heuristics shared by Bench / Verify / QueryProbe. */
 object Tuning {
 
   /** AQE wide-start (`spark.sql.adaptive.coalescePartitions.initialPartitionNum`)
@@ -9,9 +9,10 @@ object Tuning {
     * History: a flat 512 fixed an r5 superlinear sf10 regression (100×
     * shuffle volume through `cpus` reducers spilled) but cost ~2× fixed
     * overhead on small many-stage queries; r7 sized it to
-    * `inputBytes / 4 MB` (sf10 → 425). The r10 A/B (WideProbe, sf10
-    * ~1.7 GB) showed the 4 MB target had become pure overhead: after the
-    * count-first candidate caps and the 8-B/shingle representation, EVERY
+    * `inputBytes / 4 MB` (sf10 → 425). The r10 A/B (sf10 ~1.7 GB; program:
+    * `git show e7b3f60:src/main/scala/graft/tools/WideProbe.scala`) showed
+    * the 4 MB target had become pure overhead: after the count-first
+    * candidate caps and the 8-B/shingle representation, EVERY
     * sf10 heavy runs as fast or faster at wide = 32 than at 425
     * (minhash 19.6 s vs 74.2 s, embedding_neardup 13.0 vs 19.2,
     * ngram_jaccard 14.3 vs 17.3, dedup_clusters 17.8 vs 20.0; none

@@ -68,12 +68,14 @@ object IndexLifecycle {
       .select(col("id1").as("doc_id")).distinct()
     val survivors = shard.join(dupIds, Seq("doc_id"), "left_anti")
     println(s"shard ${shard.count()} docs -> ${survivors.count()} survivors")
-    graft.core.Blocks.releaseAll()
 
     // 3. stream-ingest the survivors (and the shard's vectors) — a real
     // multi-micro-batch file stream; autoCompact keeps layering bounded
     val docFeed = new java.io.File(work, "doc_feed").getAbsolutePath
     survivors.repartition(3).write.parquet(docFeed)
+    // the write re-reads the dedup checkpoints behind `survivors`: release
+    // them only once the feed is on disk
+    graft.core.Blocks.releaseAll()
     IndexIngest.dedupIngest(
       spark.readStream.schema(survivors.schema)
         .option("maxFilesPerTrigger", 1).parquet(docFeed),

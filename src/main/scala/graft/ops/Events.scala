@@ -49,7 +49,8 @@ object Events {
     * hash-joined back by rowid afterwards: the sort touches only slim
     * rows at the price of pinning the row-id frame (one eager local
     * checkpoint of the left table) plus one extra shuffle for the
-    * join-back. Measured A/B (graft.tools.AsofProbe, sf0.1 and sf1 events,
+    * join-back. Measured A/B (sf0.1 and sf1 events; probe program:
+    * `git show e7b3f60:src/main/scala/graft/tools/AsofProbe.scala`,
     * payload widths 0–16 kB, local[32]/128 GiB): the DEFAULT wins at every
     * width — in a single JVM with ample memory the wide window sort never
     * spills, while the slim path always pays its checkpoint + wide

@@ -166,7 +166,8 @@ object Similarity {
     * that nTables·probeBudget/2^bits ≈ 1.5·[[targetFraction]] — the same
     * examined-fraction envelope as [[lshAutoParams]], spent better.
     * The r10 fixed-fraction sweep on the fresh-content 100× leg
-    * (tools.AnnFrontier) showed, all at fraction 0.156: blind Hamming-1
+    * (`git show e7b3f60:src/main/scala/graft/tools/AnnFrontier.scala`)
+    * showed, all at fraction 0.156: blind Hamming-1
     * (r9 auto) recall 0.692; ranked probing at the r9 shape 0.752; FINER
     * buckets + MORE tables + deeper ranked probing 0.862
     * (bits 12, 12 tables, budget 53). The shape that wins: buckets of
@@ -226,10 +227,11 @@ object Similarity {
     require(corpusSize >= 0, s"corpusSize must be non-negative: $corpusSize")
     val n = math.max(2L, corpusSize)
     // FINE cells are the recall lever at a fixed examined fraction — the
-    // r10 sweep on the fresh-content 100× leg (tools.AnnFrontier, all at
-    // exact-scored fraction 0.1, n = 200k): 200-member cells (the r9
-    // sizing) recall 0.654; 100-member 0.705; 50-member 0.769; 25-member
-    // 0.828. Cell count is capped at 8192 because FLAT IVF assignment
+    // r10 sweep on the fresh-content 100× leg (the AnnFrontier program
+    // cited at lshAutoParamsRanked, all at exact-scored fraction 0.1,
+    // n = 200k): 200-member cells (the r9 sizing) recall 0.654;
+    // 100-member 0.705; 50-member 0.769; 25-member 0.828. Cell count is
+    // capped at 8192 because FLAT IVF assignment
     // costs n·cells native dots (the honest scale boundary: past ~10M
     // vectors the cap makes cells grow again, and the next rung is a
     // hierarchical coarse quantizer, not a bigger flat one).
@@ -1178,9 +1180,10 @@ object Similarity {
   /** Corpus-aware IMI sizing: (cellsPerHalf, halfShortlist, probeRowBudget).
     * cellsPerHalf = ⌈√(2n)⌉ (clamped to [16, 512]) puts ~2 expected members
     * in each PRODUCT cell — the r11 sweep on the fresh-content 100× leg
-    * (tools.ImiSweep, all at exact-scored fraction 0.1, n = 200k, budgeted
-    * probing): 128 half-cells recall 0.714, 224 → 0.777, 320 → 0.790,
-    * 448 → 0.803, 512 → **0.828** — equal to flat IVF's 0.828 at the same
+    * (`git show e7b3f60:src/main/scala/graft/tools/ImiSweep.scala`, all at
+    * exact-scored fraction 0.1, n = 200k, budgeted probing): 128
+    * half-cells recall 0.714, 224 → 0.777, 320 → 0.790, 448 → 0.803,
+    * 512 → **0.828** — equal to flat IVF's 0.828 at the same
     * fraction, for 2·512 half-dots ≈ 512 full-dot equivalents of
     * assignment per vector vs the flat index's 8000 (15.6× cheaper). Extra
     * Lloyd iterations bought ≤ +0.007 for a full assignment pass — one is

@@ -1027,7 +1027,8 @@ object Stats {
     // Default flavor: top 52 bits of xxhash64(id, seed, b) — one codegen'd
     // native hash per exploded row (the Dsir hash-flavor convention; the
     // md5 chain measured 13× slower at 100 replicates × 1M rows —
-    // tools.BootProbe, 1.5 s vs 20.0 s warm).
+    // 1.5 s vs 20.0 s warm; the probe program is recoverable with
+    // `git show e7b3f60:src/main/scala/graft/tools/BootProbe.scala`).
     // `md5Flavor` keeps the oracle-recomputable spelling: first 13 md5 hex
     // digits of "id:seed:b" (the Dsir.hashUniform lattice, extended with
     // the replicate index). Both are exact dyadic fractions; w = the

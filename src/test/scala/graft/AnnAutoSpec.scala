@@ -16,7 +16,8 @@ class AnnAutoSpec extends AnyFunSuite {
 
   test("lshAutoParams: small corpora examine ~everything, big corpora bound cost") {
     // n=2000, k=10 (the bench's honest leg): bits 2, 3 tables — examined
-    // fraction bound 1.0, measured recall 0.997 (AnnSweep)
+    // fraction bound 1.0, measured recall 0.997 (r8 sweep; program:
+    // `git show e7b3f60:src/main/scala/graft/tools/AnnSweep.scala`)
     assert(Similarity.lshAutoParams(2000, 10) === ((2, 3)))
     // 100× corpus: buckets stay ~256 expected members, tables cap at 8 —
     // the cost stays bounded and the FRACTION (not the bill) degrades

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -20,6 +23,24 @@ object TestSpark {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Number of Spark jobs started while `body` runs. The listener bus
+    * delivers events asynchronously, so the count is read after a 500 ms
+    * drain.
+    */
+  def countJobs(body: => Unit): Int = {
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      Thread.sleep(500)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
   }
 
   def intDf(name: String, values: Seq[Integer]): DataFrame = {
