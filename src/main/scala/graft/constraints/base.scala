@@ -29,8 +29,8 @@ abstract class Constraint {
   /** Retrieval-cache control (reference `base.py`'s `cache_size`,
     * `lru_cache(self._cache_size)`): `None` caches indefinitely; `Some(0)`
     * disables caching so every `test` re-retrieves — the memory valve for
-    * many memory-intensive constraints tested in sequence
-    * (`test_integration.py:1082-1168`).
+    * many memory-intensive constraints: no retrieved value outlives its
+    * `test` (`test_integration.py:1082-1168`).
     */
   def cacheSize: Option[Int] = None
 

@@ -35,8 +35,9 @@ final case class MaxNearDupFraction(
 
   // Blocks.scoped: the evaluation reduces to one scalar — every
   // checkpoint the pair pipeline materializes is dead on return and is
-  // released with the scope, so a constraint suite looping over corpora
-  // holds at most ONE evaluation's blocks at a time.
+  // released with the scope, so a suite holds only the blocks of the
+  // evaluations in flight: at most one per thread of the requirement's
+  // pool (`Requirement.testAll`), never a finished evaluation's.
   override protected def retrieve(spark: SparkSession, r: DataRef): Double =
     graft.core.Blocks.scoped {
       val base = graft.core.Blocks.checkpoint(

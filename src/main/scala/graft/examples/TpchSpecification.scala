@@ -3,7 +3,7 @@ package graft.examples
 import org.apache.spark.sql.SparkSession
 
 import graft.core.Condition
-import graft.requirements.{BetweenRequirement, WithinRequirement}
+import graft.requirements.{BetweenRequirement, Requirement, WithinRequirement}
 import graft.runner.Runner
 
 /** End-to-end specification example over the driver's TPC-H-ish testdata —
@@ -14,16 +14,9 @@ import graft.runner.Runner
   * Run: `sbt "runMain graft.examples.TpchSpecification [sfDir]"`
   */
 object TpchSpecification {
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
+  /** The specification over the tables under `dir`. */
+  def requirements(dir: String): Seq[Requirement] = {
     val lineitem = WithinRequirement.fromParquet(s"$dir/lineitem.parquet")
     lineitem.addColumnExistenceConstraint(Seq("l_orderkey", "l_quantity", "l_shipdate"))
     lineitem.addNRowsMinConstraint(1000)
@@ -54,8 +47,20 @@ object TpchSpecification {
       condition1 = Some(Condition.raw("l_linenumber >= 1")),
       condition2 = None)
 
-    val failures =
-      Runner.runAndReport(spark, Seq(lineitem, orders, split))
+    Seq(lineitem, orders, split)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val spark = SparkSession.builder()
+      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+
+    val failures = Runner.runAndReport(spark, requirements(dir))
     spark.stop()
     if (failures > 0) sys.exit(1)
   }

@@ -1,6 +1,7 @@
 package graft.requirements
 
 import java.time.LocalDate
+import java.util.concurrent.{ExecutionException, Executors}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -22,7 +23,46 @@ sealed abstract class Requirement extends Iterable[Constraint] {
   override def iterator: Iterator[Constraint] = constraintsBuffer.iterator
   def constraints: Seq[Constraint] = constraintsBuffer.toSeq
 
-  def test(spark: SparkSession): Seq[TestResult] = constraints.map(_.test(spark))
+  def test(spark: SparkSession): Seq[TestResult] = Requirement.testAll(spark, constraints)
+}
+
+object Requirement {
+
+  /** Test `constraints` concurrently and return their results in
+    * declaration order. Most retrievals are small jobs whose wall time is
+    * scheduling and planning in the driver, so one at a time leaves the
+    * executors idle; submitted together, their jobs overlap.
+    *
+    * Runs on a per-call pool of min(#constraints, default parallelism,
+    * driver cores) threads — the driver plans and collects for every
+    * thread, so its own cores bound the width, not the cluster's; a single
+    * constraint runs on the caller thread. The caller creates the pool's
+    * threads, so they inherit its local properties (job tags, job group,
+    * description, scheduler pool) and active session, both inheritable
+    * thread-locals. A constraint runs wholly on one thread, so the
+    * thread-local plan capture and checkpoint scopes hold as before; up to
+    * that many evaluations' checkpoints are live at once. If any
+    * constraint throws, every other one is still waited for, then the
+    * first exception in declaration order is rethrown.
+    */
+  private[graft] def testAll(spark: SparkSession, constraints: Seq[Constraint]): Seq[TestResult] = {
+    val threads = Seq(
+      constraints.size,
+      spark.sparkContext.defaultParallelism,
+      Runtime.getRuntime.availableProcessors).min
+    if (threads <= 1) constraints.map(_.test(spark))
+    else {
+      val pool = Executors.newFixedThreadPool(threads)
+      try {
+        val pending = constraints.map(c => pool.submit(() => c.test(spark)))
+        val outcomes = pending.map { f =>
+          try Right(f.get())
+          catch { case e: ExecutionException => Left(e.getCause) }
+        }
+        outcomes.map(_.fold(e => throw e, identity))
+      } finally pool.shutdownNow(): Unit
+    }
+  }
 }
 
 /** Constraints over a single data source
@@ -1758,13 +1798,19 @@ object BetweenRequirement {
       dateColumn2: Option[String] = None): BetweenRequirement =
     new BetweenRequirement(TableSource(table1), TableSource(table2), dateColumn, dateColumn2)
 
+  /** Both sides over one source when they are equal, so it is reflected
+    * once (a table compared with a conditioned copy of itself). */
+  private def sides(s1: DataSource, s2: DataSource): (DataSource, DataSource) =
+    (s1, if (s2 == s1) s1 else s2)
+
   def fromParquet(
       path1: String,
       path2: String,
       dateColumn: Option[String] = None,
-      dateColumn2: Option[String] = None): BetweenRequirement =
-    new BetweenRequirement(
-      ParquetSource(path1), ParquetSource(path2), dateColumn, dateColumn2)
+      dateColumn2: Option[String] = None): BetweenRequirement = {
+    val (s1, s2) = sides(ParquetSource(path1), ParquetSource(path2))
+    new BetweenRequirement(s1, s2, dateColumn, dateColumn2)
+  }
 
   def fromRawQueries(
       query1: String,
@@ -1798,11 +1844,12 @@ object BetweenRequirement {
       schemaDdl1: Option[String] = None,
       schemaDdl2: Option[String] = None,
       dateColumn: Option[String] = None,
-      dateColumn2: Option[String] = None): BetweenRequirement =
-    new BetweenRequirement(
+      dateColumn2: Option[String] = None): BetweenRequirement = {
+    val (s1, s2) = sides(
       FileSource(path1, format1, options1, schemaDdl1),
-      FileSource(path2, format2, options2, schemaDdl2),
-      dateColumn, dateColumn2)
+      FileSource(path2, format2, options2, schemaDdl2))
+    new BetweenRequirement(s1, s2, dateColumn, dateColumn2)
+  }
 
   def apply(
       source1: DataSource,

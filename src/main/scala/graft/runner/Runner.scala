@@ -25,8 +25,10 @@ object Runner {
       requirements: Seq[Requirement]): Seq[(String, SparkSession => TestResult)] =
     requirements.flatMap(_.constraints).map(c => c.description -> ((s: SparkSession) => c.test(s)))
 
+  /** Every constraint of every requirement, run concurrently
+    * ([[Requirement.testAll]]); results in declaration order. */
   def runAll(spark: SparkSession, requirements: Seq[Requirement]): Seq[TestResult] =
-    requirements.flatMap(_.test(spark))
+    Requirement.testAll(spark, requirements.flatMap(_.constraints))
 
   /** Run everything, print per-constraint outcomes, return #failures. */
   def runAndReport(

@@ -1,9 +1,12 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.Properties
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftTestBridge, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 /** One shared local session for the whole suite (the Spark analogue of the
@@ -25,23 +28,28 @@ object TestSpark {
     s
   }
 
-  /** Number of Spark jobs started while `body` runs. The listener bus
-    * delivers events asynchronously, so the count is read after a 500 ms
-    * drain.
+  /** Local properties of every Spark job started while `body` runs, in
+    * start order. The listener bus delivers events asynchronously, so it is
+    * drained before the listener is added (earlier jobs stay out) and
+    * before it is removed (every job of `body` is in).
     */
-  def countJobs(body: => Unit): Int = {
-    val jobs = new AtomicInteger(0)
+  def jobProperties(body: => Unit): Seq[Properties] = {
+    val jobs = new ConcurrentLinkedQueue[Properties]()
     val listener = new SparkListener {
       override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
+        jobs.add(Option(jobStart.properties).getOrElse(new Properties)): Unit
     }
+    GraftTestBridge.drainListenerBus(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       body
-      Thread.sleep(500)
+      GraftTestBridge.drainListenerBus(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
+    jobs.asScala.toSeq
   }
+
+  /** Number of Spark jobs started while `body` runs. */
+  def countJobs(body: => Unit): Int = jobProperties(body).size
 
   def intDf(name: String, values: Seq[Integer]): DataFrame = {
     val rows = values.map(v => Row(v))
